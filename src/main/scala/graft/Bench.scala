@@ -2,32 +2,32 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
-import graft.core.GraftSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.sum
 
-/** Benchmark main: times each headline query on SPARK_GRAFT_SF_DIR and
+import graft.core.{GraftSession, Json, Measure, Shared, Timing}
+
+/** Benchmark main: times every catalog query on SPARK_GRAFT_SF_DIR and
   * writes the full per-query JSON to target/bench.json, then prints it,
   * then prints a SHORT summary JSON line LAST. The driver captures only a
   * tail of stdout, and the ~3.5 KB full line outran that window in round 3
-  * (BENCH_r03.json "parsed": null) — the short line (< 300 bytes: totals,
+  * (BENCH_r03.json "parsed": null) — the short line (< 400 bytes: totals,
   * gridmix, errors, no per-query map) is always the final line so the
   * driver can parse it regardless of tail size.
   *
-  * Materialization is a noop-format write, not count(): count() lets
-  * Catalyst prune unreferenced expressions, so projection/window-shaped
-  * queries (field_selection, secondary_sort) would degrade to parquet
-  * count-stars and measure nothing. The noop sink consumes every row and
-  * column while writing no bytes.
+  * Every row runs the one [[Measure.row]] protocol: `queries_cold` carries
+  * the first attempt (with the shared builds it paid), `queries` the warm
+  * min of the later attempts, and `queries_attempts` every attempt's
+  * cause record. A cold/warm gap is read from the artifact, not hidden by
+  * per-query warm-ups.
   *
-  * Each query runs twice; the reported time is the min over successful
-  * attempts (steady-state, post-JIT) and "queries_max" carries the max so
-  * round-over-round comparisons can separate run-to-run variance from real
-  * drift (a min that regresses beyond the previous round's max is drift;
-  * inside the old min..max band it is noise).
-  *
-  * A query that throws on every attempt is reported with -1.0 and listed in
-  * "errors" — a crashing query must be distinguishable from a fast success.
+  * A query with no successful warm attempt is reported with -1.0 and
+  * listed in "errors" — a crashing query must be distinguishable from a
+  * fast success. A failure of the harness itself (warm-up, calibration,
+  * plan capture) lands in "harness_errors"; an empty array means none.
   *
   * The "gridmix" object labels the reference benchmark suite's six job
   * shapes (reference: src/benchmarks/gridmix2/.../GridMixRunner.java:105-287)
@@ -78,71 +78,48 @@ object Bench {
     "webdataSort" -> "secondary_sort",  // keyed sort of wide records
   )
 
-  private case class Timing(name: String, min: Double, max: Double, ok: Boolean,
-                            attempts: Seq[String] = Nil,
-                            builds: Seq[String] = Nil)
-
-  /** Two attempts, timed independently; min/max over the successful ones.
-    * One success is a valid measurement even if the other attempt throws.
-    *
-    * With `probe` set (headline-tier queries), every timed attempt also
-    * records its cause fields — process GC delta, task-billed GC, shuffle
-    * spill, shuffle bytes written/read, task time/count, and the shared
-    * builds it paid ([[graft.core.Shared.drainBuilds]]) — into an
-    * `attempts` JSON array (round-12 verdict task 1: the batch analog of
-    * the streaming probes' per-attempt records, so a driver-side max band
-    * adjudicates itself from the artifact).
-    *
-    * When `capturePlan` is set, an untimed third execution captures the
-    * EXECUTED physical plan to target/plans/<name>.txt. Post-execution
-    * capture matters: AQE finalizes join strategies (broadcast-conversion,
-    * skew splits, coalescing) at runtime, so a pre-execution explain would
-    * show placeholder exchanges, not the decisions that produced the
-    * measured time. This is the audit trail for round-over-round
-    * regressions — diff target/plans/ between rounds to separate plan
-    * changes from environment noise.
+  /** The gridmix tiers re-run at the reference's small/medium sizes;
+    * "large" reuses the main-suite rows at the bench's SF dir.
     */
-  private def time2(spark: SparkSession, dir: String,
-                    name: String,
-                    fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                    capturePlan: Boolean = false,
-                    probe: Option[graft.core.TaskMetricsProbe] = None): Timing = {
-    // Quiesce before measuring: collect the PREVIOUS query's garbage outside
-    // the timed window. Root-caused in round 4: the r3 bench showed a
-    // contiguous run-order window (pentomino → salted_join) inflated 3-6×
-    // with byte-identical code and identical plans — residual heap pressure
-    // from an allocation-heavy query (pentomino's backtracking) bleeding
-    // into the measurements that followed it. An explicit collection pins
-    // each query's number to its own work.
-    System.gc()
-    val attemptJsons = scala.collection.mutable.Buffer.empty[String]
-    val paidBuilds = scala.collection.mutable.Buffer.empty[String]
-    def once(): Double = {
-      import graft.core.TaskMetricsProbe
-      val s0 = probe.map(_.snap())
-      val g0 = TaskMetricsProbe.jvmGcMs
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      probe.foreach { p =>
-        TaskMetricsProbe.drain(spark.sparkContext)
-        val d = p.snap() - s0.get
-        val gc = TaskMetricsProbe.jvmGcMs - g0
-        val b = graft.core.Shared.drainBuilds()
-        paidBuilds ++= b
-        val bJson = b.map("\"" + _ + "\"").mkString("[", ",", "]")
-        attemptJsons += f"""{"sec":$sec%.3f,"gc_ms":$gc,"gc_pct":${100.0 * gc / math.max(1.0, sec * 1000)}%.1f,"task_gc_ms":${d.gcMs},"spill_mb":${d.spillBytes >> 20},"shuf_w_mb":${d.shufWriteBytes >> 20},"shuf_r_mb":${d.shufReadBytes >> 20},"task_ms":${d.runMs},"tasks":${d.tasks},"builds":$bJson}"""
-      }
-      sec
+  private val TierDirs = Seq(
+    "small" -> "/root/testdata/sf0.001",
+    "medium" -> "/root/testdata/sf0.01",
+  )
+
+  /** Harness failures as `{where, message}` records, in order. */
+  private[graft] final class HarnessErrors {
+    private val errors = ArrayBuffer.empty[(String, String)]
+
+    def note(where: String, message: String): Unit = {
+      System.err.println(s"[harness] $where: $message")
+      errors += where -> message
     }
-    val attempts = Seq.fill(2)(
-      try Right(once()) catch {
-        case e: Throwable =>
-          if (probe.isDefined) attemptJsons += "{\"sec\":-1.0,\"error\":true}"
-          Left(e)
-      })
-    if (capturePlan) {
-      try {
+
+    def guard[T](where: String)(body: => T): Option[T] =
+      try Some(body)
+      catch { case NonFatal(e) => note(where, Measure.message(e)); None }
+
+    def json: String = Json.arr(errors.toSeq.map { case (w, m) =>
+      Json.obj(Seq("where" -> Json.str(w), "message" -> Json.str(m)))
+    })
+  }
+
+  /** The row loop: each named query through [[Measure.row]], then (with
+    * `plans`) one untimed execution that captures its EXECUTED physical
+    * plan to target/plans/<name>.txt. Post-execution capture matters: AQE
+    * finalizes join strategies (broadcast conversion, skew splits,
+    * coalescing) at runtime, so a pre-execution explain would show
+    * placeholder exchanges, not the decisions behind the measured time.
+    */
+  private[graft] def rows(measure: Measure, spark: SparkSession, dir: String,
+                          names: Seq[String], harness: HarnessErrors,
+                          plans: Boolean = true): Seq[Timing] =
+    names.map { name =>
+      val fn = SparkEntry.queries(name)
+      val row = measure.row(name, fn, dir)
+      if (!row.ok)
+        System.err.println(s"[bench] $name failed: ${row.error.getOrElse("")}")
+      else if (plans) harness.guard(s"plan:$name") {
         val qe = fn(spark, dir).queryExecution
         // execute through the df's OWN QueryExecution (df.write would plan a
         // separate one) so the captured AdaptiveSparkPlan is isFinalPlan=true
@@ -150,253 +127,117 @@ object Bench {
         Files.createDirectories(Paths.get("target/plans"))
         Files.writeString(Paths.get(s"target/plans/$name.txt"),
           qe.explainString(org.apache.spark.sql.execution.FormattedMode))
-      } catch { case _: Throwable => () }
+      }
+      row
     }
-    attempts.collect { case Right(s) => s } match {
-      case ok if ok.nonEmpty =>
-        Timing(name, ok.min, ok.max, ok = true,
-          attempts = attemptJsons.toSeq, builds = paidBuilds.toSeq)
-      case _ =>
-        val e = attempts.collectFirst { case Left(t) => t }.get
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        Timing(name, -1.0, -1.0, ok = false,
-          attempts = attemptJsons.toSeq, builds = paidBuilds.toSeq)
+
+  /** Fixed-work calibration kernels: the work is data-free and identical
+    * every round, so the numbers track the ENVIRONMENT (CPU contention,
+    * throttling, GC headroom, disk cache), never the catalog. Returns
+    * (cpu, io) seconds, each the warm min of 3 after one cold attempt:
+    *   - cpu: 2³¹ xxhash64 evaluations over a literal range — pure
+    *     compute, no exchange, no disk;
+    *   - io: a 2²⁴-row → 1 024-group shuffle plus a filtered aggregate
+    *     scan of a fixed 2²³-row parquet table (written untimed per run).
+    * One cpu-bound number over-states environment load for mixed
+    * workloads (round 12), hence the split.
+    */
+  private def calibrate(measure: Measure, spark: SparkSession,
+                        harness: HarnessErrors): (Double, Double) = {
+    val cpus = spark.sparkContext.defaultParallelism
+    val scanDir = "target/calib-scan"
+    harness.guard("calibration_scan_table") {
+      spark.range(0, 1L << 23, 1, cpus)
+        .selectExpr("id", "xxhash64(id) AS h", "cast(id % 997 AS string) AS s")
+        .write.mode("overwrite").parquet(scanDir)
     }
+    val kernels = Seq[(String, (SparkSession, String) => DataFrame)](
+      "calibration_cpu" -> ((s, _) => s.range(0, 1L << 31, 1, cpus)
+        .selectExpr("xxhash64(id) AS h")
+        // bit_xor, not sum: 2³¹ hash values overflow a long under ANSI
+        .selectExpr("bit_xor(h) AS s")),
+      "calibration_shuffle" -> ((s, _) => s.range(0, 1L << 24, 1, cpus)
+        .selectExpr("id % 1024 AS k", "id").groupBy("k").agg(sum("id"))),
+      "calibration_scan" -> ((s, d) => s.read.parquet(d)
+        .where("pmod(h, 7) = 0").groupBy("s").agg(sum("id"))),
+    )
+    val Seq(cpu, shuffle, scan) = kernels.map { case (name, fn) =>
+      val row = measure.row(name, fn, scanDir, attempts = 4)
+      if (!row.ok) harness.note(name, row.error.getOrElse("no warm attempt"))
+      row.warm
+    }
+    (cpu, if (shuffle < 0 || scan < 0) -1.0 else shuffle + scan)
   }
 
   private def secs(v: Double): String = f"$v%.3f"
 
-  private def jsonMap(entries: Seq[(String, String)]): String =
-    entries.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // iterative operators dump each round's executed plan alongside the
-    // query-level captures, so plandigest sees loop bodies too
-    spark.conf.set(graft.core.PlanTrace.DirKey, "target/plans")
-    // JVM/codegen warmup on the smallest corpus so measured times reflect
-    // steady-state execution, not first-query classloading.
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-    // Fixed-work calibration kernels (round-11 verdict task 2; SPLIT in
-    // round 13 per the r12 verdict task 7): the work is data-free and
-    // identical every round, so the calibration numbers track the
-    // ENVIRONMENT (CPU contention, container throttling, GC headroom, disk
-    // cache pressure), never the catalog — round-over-round comparison
-    // divides per-query deltas by the calibration ratio to separate drift
-    // like round 11's environment-wide +25-30% from real regressions.
-    // Round 12 proved ONE cpu-bound number over-states env load for mixed
-    // workloads (the 317 s driver run normalized PAST the local closes),
-    // so the kernel now reports its components separately:
-    //   - calibration_cpu_sec: 2³¹ xxhash64 evaluations over a literal
-    //     range — pure compute, no exchange, no disk;
-    //   - calibration_io_sec: the 2²⁴-row → 1 024-group shuffle plus a
-    //     filtered aggregate scan of a fixed 2²³-row parquet table
-    //     (written untimed per run) — exchange + parquet-read bound;
-    //   - calibration_sec = cpu + io (the r12-comparable combined number:
-    //     same total work as the old kernel plus the scan leg).
-    // Min of 3 after one untimed warm attempt each, mirroring the
-    // per-query protocol.
-    val calScanDir = "target/calib-scan"
-    def calCpuOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 1L << 31, 1, cpus)
-        .selectExpr("xxhash64(id) AS h")
-        // bit_xor, not sum: 2³¹ hash values overflow a long under ANSI
-        .selectExpr("bit_xor(h) AS s")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def calIoOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 1L << 24, 1, cpus)
-        .selectExpr("id % 1024 AS k", "id")
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("id"))
-        .write.format("noop").mode("overwrite").save()
-      spark.read.parquet(calScanDir)
-        .where("pmod(h, 7) = 0")
-        .groupBy("s").agg(org.apache.spark.sql.functions.sum("id"))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val (calibrationCpuSec, calibrationIoSec) =
-      try {
-        spark.range(0, 1L << 23, 1, cpus)
-          .selectExpr("id", "xxhash64(id) AS h",
-            "cast(id % 997 AS string) AS s")
-          .write.mode("overwrite").parquet(calScanDir)
-        calCpuOnce(); calIoOnce()
-        (Seq.fill(3)(calCpuOnce()).min, Seq.fill(3)(calIoOnce()).min)
-      } catch { case _: Throwable => (-1.0, -1.0) }
+  /** The full artifact line, then the short summary line — in print order. */
+  private[graft] def lines(sfDir: String, results: Seq[Timing],
+                           calibration: (Double, Double),
+                           tiers: Seq[(String, Seq[Timing])],
+                           streaming: Seq[(String, String)],
+                           harness: HarnessErrors): Seq[String] = {
+    val (calibrationCpuSec, calibrationIoSec) = calibration
     val calibrationSec =
       if (calibrationCpuSec < 0 || calibrationIoSec < 0) -1.0
       else calibrationCpuSec + calibrationIoSec
-    // the pentomino backtracking kernel needs its own warmup: the generic
-    // entry-query pass never touches it, and its cold/warm gap (29 s vs
-    // 2.7 s, BENCH_r04 queries_max) dominated round-4 bench wall time.
-    // Round-5/6 history of this fix: a start-of-run warmup (kernel +
-    // untimed full query) measured warm at sf0.01 (151-query suite) yet
-    // BOTH timed attempts ran cold (24 s) at sf0.1 — ~90 codegen-heavy
-    // queries execute between the warmup and pentomino's alphabetical turn,
-    // enough to flush its compiled kernel out of the JIT code cache (build
-    // also raises ReservedCodeCacheSize). The durable fix: warm IMMEDIATELY
-    // before the timed attempts, per query, where nothing can evict it.
-    try graft.operators.DistributedSearch.warmPentKernel()
-    catch { case _: Throwable => () }
-    // bfs_hops: its dominant cold cost is the memoized co-purchase edge
-    // build ([[graft.catalog.Algorithms.bfsHops]]) — warming populates the
-    // Shared memo so BOTH timed attempts measure the traversal, and the
-    // build cost is disclosed here instead of reading as a 3× max band
-    // graph_diameter: its inputs are already memoized (the co-purchase
-    // edge frame, built and attributed under bfs_hops), yet r8 showed a
-    // 3.2/9.9 cold/warm band — the cold attempt pays C2 compilation of
-    // the double-sweep's per-round join/min-agg loop bodies plus the
-    // three 1-row argmax collects' first codegen; warm both attempts so
-    // the timed number is the traversal (disclosed via warm_first)
-    // bm25_topk / graph_assortativity: each is the FIRST consumer of its
-    // shared build (bm25_index / weighted_co_edges), so its first timed
-    // attempt paid the build and the max band stayed 3-6× wide even with
-    // shared_builds disclosure (r9 1.77/5.91 and 0.58/3.77) — a warmup
-    // pays the build untimed so the band measures the query, the
-    // dedup_simhash treatment
-    // ann_pq: first consumer of the memoized PQ code frame — same story
-    // (r10 closing bench band 1.22/4.28 with the build disclosed; the
-    // warmup moves the build out of the timed max entirely)
-    // cluster_medoids: alphabetically the FIRST consumer of the
-    // kmeans_assignment memo — its first timed attempt paid the Lloyd
-    // build (r10 band 0.49/1.55; isolated BenchOne 3.98/0.91/0.83 s, warm
-    // band 1.11 — the query itself is tight, the spread is the build)
-    // approx_distinct_kmv / jdbc_roundtrip: no shared build, but the r10
-    // >3× bands (0.40/1.80, 0.41/1.33) are first-attempt one-time costs —
-    // KMV sketch codegen C2 compile, H2 driver + database-file init —
-    // confirmed tight once warm (isolated BenchOne warm bands 1.24 / 1.03)
-    // curation_funnel: alphabetically ahead of dedup_simhash, so it is
-    // now the first consumer of the simhash_fingerprints memo — same
-    // first-consumer treatment as cluster_medoids above
-    // active_learning_loop: its 3 rounds each codegen a fresh
-    // literal-bearing plan on the first attempt (r11 closing band
-    // 2.17/4.47); the plans are cached for later attempts, so a warmup
-    // moves the compile out of the timed max
-    // containment_pairs: the r12 driver artifact carried an unexplained
-    // 16.6 s min / 33.2 s max against ~3.7-4.0 s local closes — its two
-    // per-attempt Materialize checkpoints (vocab, docArr) and first-attempt
-    // codegen had no attribution. warm_first moves the compile ramp out of
-    // the timed attempts; the checkpoints are now noteBuild-attributed per
-    // attempt (SetSimJoin), and the headline tier's per-attempt cause
-    // fields (queries_attempts) carry GC/spill/shuffle for whatever
-    // residual remains
-    val warmFirst = Set("pentomino", "bfs_hops", "graph_diameter",
-      "bm25_topk", "graph_assortativity", "ann_pq",
-      "cluster_medoids", "approx_distinct_kmv", "jdbc_roundtrip",
-      "curation_funnel", "active_learning_loop", "containment_pairs")
-    // per-query shared-frame builds (label list): a memoized consumer's
-    // first attempt pays the build, so its max/min spread is explained
-    // here rather than read as variance
-    val sharedBuilds = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
-    val probe = new graft.core.TaskMetricsProbe
-    spark.sparkContext.addSparkListener(probe)
-    val results = SparkEntry.headlines.toSeq.sortBy(_._1).map { case (name, fn) =>
-      if (warmFirst(name)) {
-        // two untimed runs: the first triggers C2 compilation of the
-        // task-side kernel, the second runs mostly compiled and finishes
-        // the ramp; a GC sweep keeps the suite's accumulated garbage from
-        // billing its pause to this query's timed attempts
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        } catch { case _: Throwable => () }
-        System.gc()
-      }
-      graft.core.Shared.drainBuilds() // discard builds from warmups/neighbors
-      // headline-tier queries get per-attempt cause fields (the artifact
-      // that adjudicates a driver-vs-local band); the long tail of
-      // sub-second queries stays record-free to bound artifact size
-      val t = time2(spark, sfDir, name, fn, capturePlan = true,
-        probe = if (HeadlineTier(name)) Some(probe) else None)
-      val built = t.builds ++ graft.core.Shared.drainBuilds()
-      if (built.nonEmpty) sharedBuilds(name) = built
-      t
-    }
-    val timed = results.map(t => t.name -> t.min).toMap
-    val qs = jsonMap(results.map(t => t.name -> secs(t.min)))
-    val qsMax = jsonMap(results.map(t => t.name -> secs(t.max)))
-    val errors = results.filterNot(_.ok).map("\"" + _.name + "\"").mkString("[", ",", "]")
-    val total = results.filter(_.ok).map(_.min).sum
+    val errors = Json.strs(results.filterNot(_.ok).map(_.name))
+    val total = results.filter(_.ok).map(_.warm).sum
     val headline = results.filter(r => r.ok && HeadlineTier(r.name))
-    val headlineTotal = headline.map(_.min).sum
+    val headlineTotal = headline.map(_.warm).sum
 
-    // Gridmix tiers: the six shapes re-run at the reference's small/medium
-    // sizes; "large" reuses the main-suite numbers at sfDir (no re-run).
-    val tierDirs = Seq(
-      "small" -> "/root/testdata/sf0.001",
-      "medium" -> "/root/testdata/sf0.01",
-    )
-    val tierJsons = tierDirs.flatMap { case (tier, dir) =>
-      if (!Files.isDirectory(Paths.get(dir))) None
-      else {
-        val ts = GridmixScenarios.map { case (scenario, q) =>
-          scenario -> time2(spark, dir, q, SparkEntry.headlines(q))
-        }
-        val tierTotal = ts.map(_._2).filter(_.ok).map(_.min).sum
-        // min AND max per shape (queries/queries_max convention): a tier
-        // shape whose two attempts disagree is visible without a re-run
-        Some(tier -> jsonMap(
-          ts.map { case (s, t) => s -> secs(t.min) } :+
-            ("total" -> secs(tierTotal)) :+
-            ("max" -> jsonMap(ts.map { case (s, t) => s -> secs(t.max) }))))
+    def shapes(rs: Seq[Timing], value: Timing => Double): Seq[(String, String)] = {
+      val byName = rs.map(r => r.name -> r).toMap
+      GridmixScenarios.map { case (scenario, q) =>
+        scenario -> secs(byName.get(q).map(value).getOrElse(-1.0))
       }
     }
-    val largeEntries = GridmixScenarios.map { case (scenario, q) =>
-      scenario -> secs(timed.getOrElse(q, -1.0))
+    def shapeTotal(rs: Seq[Timing]): Double = {
+      val qs = GridmixScenarios.map(_._2).toSet
+      rs.filter(r => r.ok && qs(r.name)).map(_.warm).sum
     }
-    val gmTotal = GridmixScenarios
-      .flatMap { case (_, q) => timed.get(q) }.filter(_ >= 0).sum
-    val largeJson = jsonMap(largeEntries :+ ("total" -> secs(gmTotal)))
-    val tiersJson = jsonMap(tierJsons :+ ("large" -> largeJson))
+    val gmTotal = shapeTotal(results)
+    val tierJsons = tiers.map { case (tier, rs) =>
+      tier -> Json.obj(shapes(rs, _.warm) ++ Seq(
+        "total" -> secs(shapeTotal(rs)),
+        "cold" -> Json.obj(shapes(rs, _.cold))))
+    }
+    val large = shapes(results, _.warm) :+ ("total" -> secs(gmTotal))
     // top level keeps the large-tier shapes for round-over-round continuity
-    val gridmix = jsonMap(
-      largeEntries ++ Seq("total" -> secs(gmTotal), "tiers" -> tiersJson))
+    val gridmix = Json.obj(large :+
+      ("tiers" -> Json.obj(tierJsons :+ ("large" -> Json.obj(large)))))
 
-    // streaming throughput probes (after the timed batch queries so their
-    // load cannot bleed into the per-query numbers)
-    // values arrive pre-formatted (numbers, or quoted failure-cause
-    // strings) so a failed attempt's WHY lands in the artifact
-    //
-    // the batch catalog leaves persisted Shared memos + cached layouts on
-    // the heap; at the driver's sf0.1 that retained set is ~10× the local
-    // rehearsal's, and the resulting GC pressure is the prime suspect for
-    // the r10 keyed-sketch attempt band (2.06 driver vs 1.04 local on the
-    // SAME fixed-rate probe). The probes measure the streaming engine, not
-    // the batch suite's leftovers — drop them first.
-    graft.core.Shared.clear()
-    spark.catalog.clearCache()
-    System.gc()
-    val streamingJson = jsonMap(graft.streaming.StreamingBench.run(spark))
-
-    // disclose which queries got the per-query warm-first conditioning
-    // (untimed runs + GC immediately before their timed attempts) so
-    // cross-query and round-over-round comparisons can account for the
-    // asymmetric protocol
-    val warmFirstJson =
-      warmFirst.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val sharedBuildsJson = jsonMap(sharedBuilds.toSeq.map { case (q, ls) =>
-      q -> ls.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def perQuery(value: Timing => String): String =
+      Json.obj(results.map(r => r.name -> value(r)))
+    val sharedBuilds = Json.obj(results.flatMap { r =>
+      val built = r.attempts.flatMap(_.builds)
+      if (built.isEmpty) None else Some(r.name -> Json.strs(built))
     })
-    // per-attempt cause records for the headline tier: each timed attempt's
-    // seconds + GC/spill/shuffle deltas + the shared builds it paid
-    val attemptsJson = jsonMap(results.filter(_.attempts.nonEmpty).map(t =>
-      t.name -> t.attempts.mkString("[", ",", "]")))
-    val line =
-      s"""{"metric":"total","value":${secs(total)},"unit":"sec","calibration_sec":${secs(calibrationSec)},"calibration_cpu_sec":${secs(calibrationCpuSec)},"calibration_io_sec":${secs(calibrationIoSec)},"headline_total":${secs(headlineTotal)},"headline_n":${headline.size},"queries":$qs,"queries_max":$qsMax,"queries_attempts":$attemptsJson,"warm_first":$warmFirstJson,"shared_builds":$sharedBuildsJson,"gridmix":$gridmix,"streaming":$streamingJson,"errors":$errors,"sf":"$sfDir"}"""
-    // Short summary: everything the driver must ingest, no per-query map,
-    // always < ~400 bytes so a stdout tail capture cannot truncate it.
-    val shortLine = jsonMap(Seq(
-      "metric" -> "\"total\"",
+    val line = Json.obj(Seq(
+      "metric" -> Json.str("total"),
       "value" -> secs(total),
-      "unit" -> "\"sec\"",
+      "unit" -> Json.str("sec"),
+      "calibration_sec" -> secs(calibrationSec),
+      "calibration_cpu_sec" -> secs(calibrationCpuSec),
+      "calibration_io_sec" -> secs(calibrationIoSec),
+      "headline_total" -> secs(headlineTotal),
+      "headline_n" -> headline.size.toString,
+      "queries" -> perQuery(r => secs(r.warm)),
+      "queries_cold" -> perQuery(r => secs(r.cold)),
+      "queries_attempts" -> perQuery(r => Json.arr(r.attempts.map(_.json))),
+      "shared_builds" -> sharedBuilds,
+      "gridmix" -> gridmix,
+      "streaming" -> Json.obj(streaming),
+      "errors" -> errors,
+      "harness_errors" -> harness.json,
+      "sf" -> Json.str(sfDir),
+    ))
+    // Short summary: everything the driver must ingest, no per-query map,
+    // always < 400 bytes so a stdout tail capture cannot truncate it.
+    val shortLine = Json.obj(Seq(
+      "metric" -> Json.str("total"),
+      "value" -> secs(total),
+      "unit" -> Json.str("sec"),
       "n_queries" -> results.size.toString,
       "n_errors" -> results.count(!_.ok).toString,
       "errors" -> errors,
@@ -405,17 +246,53 @@ object Bench {
       "calibration_io_sec" -> secs(calibrationIoSec),
       "headline_total" -> secs(headlineTotal),
       "gridmix_total" -> secs(gmTotal),
-      "detail" -> "\"target/bench.json\"",
-      "sf" -> ("\"" + sfDir + "\""),
+      "detail" -> Json.str("target/bench.json"),
+      "sf" -> Json.str(sfDir),
     ))
+    Seq(line, shortLine)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.fromEnv()
+    // iterative operators dump each round's executed plan alongside the
+    // query-level captures, so plandigest sees loop bodies too
+    spark.conf.set(graft.core.PlanTrace.DirKey, "target/plans")
+    val harness = new HarnessErrors
+    val measure = new Measure(spark)
+    // process warm-up on the smallest corpus: the first measured row must
+    // not pay the session's classloading
+    measure.attempt((s, _) => SparkEntry.entry(s), "")
+      .error.foreach(harness.note("warmup", _))
+    val calibration = calibrate(measure, spark, harness)
+    val results =
+      rows(measure, spark, sfDir, SparkEntry.queries.keys.toSeq.sorted, harness)
+    val tiers = TierDirs.filter { case (_, dir) => Files.isDirectory(Paths.get(dir)) }
+      .map { case (tier, dir) =>
+        tier -> rows(measure, spark, dir, GridmixScenarios.map(_._2), harness,
+          plans = false)
+      }
+    // streaming throughput probes run after the batch rows so their load
+    // cannot bleed into the per-query numbers, and on a heap cleared of the
+    // batch suite's persisted memos and cached layouts: the probes measure
+    // the streaming engine, not the batch suite's leftovers (the r10
+    // keyed-sketch band tracked exactly that retained set's GC pressure)
+    Shared.clear()
+    spark.catalog.clearCache()
+    System.gc()
+    val streaming = graft.streaming.StreamingBench.run(spark)
+    measure.close()
+    val out = lines(sfDir, results, calibration, tiers, streaming, harness)
     try {
       Files.createDirectories(Paths.get("target"))
-      Files.writeString(Paths.get("target/bench.json"), line + "\n")
-    } catch { case _: Throwable => () }
+      Files.writeString(Paths.get("target/bench.json"), out.head + "\n")
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[harness] target/bench.json: ${Measure.message(e)}")
+    }
     // stop FIRST so no shutdown logging lands after the JSON — the driver
     // reads the tail of stdout and the summary line must be last
     spark.stop()
-    println(line)
-    println(shortLine)
+    out.foreach(println)
   }
 }

@@ -1,14 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.{GraftSession, Measure}
 
-import graft.core.GraftSession
-
-/** Dev-loop timing for a few headline queries: `runMain graft.BenchOne
-  * <sfDir> <query>[,<query>...] [attempts] [cold]`. Same noop-sink
-  * materialization as [[Bench]] (so nothing is pruned), prints each
-  * attempt's seconds — iterate on one operator without paying for the
-  * full suite. With the literal 4th arg `cold`, the [[graft.core.Shared]]
+/** Dev-loop timing for a few catalog queries: `runMain graft.BenchOne
+  * <sfDir> <query>[,<query>...] [attempts] [cold]`. Each attempt goes
+  * through the [[Measure]] core [[Bench]] uses and prints its seconds and
+  * cause record — iterate on one operator without paying for the full
+  * suite. With the literal 4th arg `cold`, the [[graft.core.Shared]]
   * memo is cleared before every attempt so a memoized query's derive
   * cost is measured on each attempt instead of only the first.
   */
@@ -18,18 +16,14 @@ object BenchOne {
     val names = args(1).split(',').toSeq
     val attempts = if (args.length > 2) args(2).toInt else 2
     val cold = args.length > 3 && args(3) == "cold"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark: SparkSession = GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     spark.conf.set(graft.core.PlanTrace.DirKey, "target/plans")
+    val measure = new Measure(spark)
     names.foreach { name =>
-      val fn = SparkEntry.headlines(name)
+      val fn = SparkEntry.queries(name)
       (1 to attempts).foreach { i =>
-        if (cold) graft.core.Shared.clear()
-        System.gc()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        println(f"[benchone] $name attempt $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+        val a = measure.attempt(fn, sfDir, clearMemo = cold)
+        println(f"[benchone] $name attempt $i: ${a.sec}%.3f s ${a.json}")
       }
     }
     spark.stop()

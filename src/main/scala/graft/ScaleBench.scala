@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
-import graft.core.GraftSession
+import graft.core.{GraftSession, Json, Measure}
 
 /** Scaling-exponent bench: time the heaviest catalog queries at two scale
   * factors (sf0.1 and the [[ScaleUp]]-derived sf1) and report each query's
@@ -14,15 +14,13 @@ import graft.core.GraftSession
   *
   * `runMain graft.ScaleBench [smallDir] [bigDir] [factor] [q1,q2,...]`
   *
-  * Protocol (differences from [[Bench]] are deliberate):
-  *   - [[graft.core.Shared.clear]] before EVERY timed attempt: the memo
-  *     turns a second attempt into a cache read, and a scaling exponent
-  *     measured on cache hits would be meaningless — here each attempt
-  *     pays the full derive-from-parquet cost, so the exponent covers the
-  *     builds too.
-  *   - One untimed warmup per query on the SMALL dir first (JIT/codegen
-  *     ramp), then min-of-2 cold-memo attempts per (query, dir) —
-  *     steady-state compilation, cold data path.
+  * Protocol: [[Bench]]'s row protocol (one cold attempt, warm = min of
+  * the rest) per (query, dir), small dir first, with one difference:
+  * [[graft.core.Shared.clear]] before EVERY attempt. The memo turns a
+  * later attempt into a cache read, and a scaling exponent measured on
+  * cache hits would be meaningless — here each attempt pays the full
+  * derive-from-parquet cost, so the exponent covers the builds too, while
+  * the cold attempt still absorbs the JIT/codegen ramp.
   */
 object ScaleBench {
   val DefaultQueries: Seq[String] = Seq(
@@ -34,47 +32,33 @@ object ScaleBench {
     // until measured here
     "dedup_cluster", "pagerank", "bfs_hops", "ktruss_graph", "kcore_graph")
 
-  private def timeOne(spark: SparkSession, dir: String, name: String): Double = {
-    graft.core.Shared.clear()
-    System.gc()
-    val t0 = System.nanoTime()
-    SparkEntry.headlines(name)(spark, dir)
-      .write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
-  }
-
   def main(args: Array[String]): Unit = {
     val small = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val big = if (args.length > 1) args(1) else "target/sf1"
     val factor = if (args.length > 2) args(2).toDouble else 10.0
     val queries =
       if (args.length > 3) args(3).split(',').toSeq else DefaultQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
+    val measure = new Measure(spark)
+    val harness = new Bench.HarnessErrors
 
-    val rows = queries.map { q =>
-      try {
-        graft.core.Shared.clear()
-        SparkEntry.headlines(q)(spark, small)
-          .write.format("noop").mode("overwrite").save() // untimed JIT warmup
-        val ts = Seq.fill(2)(timeOne(spark, small, q)).min
-        val tb = Seq.fill(2)(timeOne(spark, big, q)).min
-        val exp = math.log(tb / ts) / math.log(factor)
-        println(f"[scalebench] $q%-20s sf0.1 $ts%7.2f s   sf1 $tb%7.2f s   exponent $exp%5.2f")
-        (q, ts, tb, exp)
-      } catch {
-        case e: Throwable =>
-          println(s"[scalebench] $q FAILED: ${e.getMessage}")
-          (q, -1.0, -1.0, Double.NaN)
-      }
-    }
-    val json = rows.map { case (q, ts, tb, exp) =>
-      f""""$q":{"sf01_sec":$ts%.3f,"sf1_sec":$tb%.3f,"exponent":$exp%.3f}"""
-    }.mkString("{", ",", "}")
+    val rows = queries.flatMap(q => harness.guard(q) {
+      val ts = measure.row(q, SparkEntry.queries(q), small, clearMemo = true)
+      val tb = measure.row(q, SparkEntry.queries(q), big, clearMemo = true)
+      ts.error.orElse(tb.error).foreach(harness.note(q, _))
+      val exp = math.log(tb.warm / ts.warm) / math.log(factor)
+      println(f"[scalebench] $q%-20s sf0.1 ${ts.warm}%7.2f s   sf1 ${tb.warm}%7.2f s   exponent $exp%5.2f")
+      // a failed side has no exponent: null, not a number or NaN (not JSON)
+      q -> Json.obj(Seq("sf01_sec" -> f"${ts.warm}%.3f", "sf1_sec" -> f"${tb.warm}%.3f",
+        "exponent" -> (if (ts.ok && tb.ok) f"$exp%.3f" else "null")))
+    })
+    val json = Json.obj(rows :+ ("harness_errors" -> harness.json))
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("target/scalebench.json"), json + "\n")
-    catch { case _: Throwable => () }
+    catch {
+      case NonFatal(e) =>
+        System.err.println(s"[harness] target/scalebench.json: ${Measure.message(e)}")
+    }
     spark.stop()
     println(json)
   }

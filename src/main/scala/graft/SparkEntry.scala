@@ -47,7 +47,6 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     allDefs.flatMap(d => d.oracle.map(d.name -> _)).toMap
 
-  /** Benchmark headline subset. */
-  def headlines: Map[String, (SparkSession, String) => DataFrame] =
-    allDefs.filter(_.headline).map(d => d.name -> d.fn).toMap
+  /** Benchmark query set (driver contract): every catalog query. */
+  def headlines: Map[String, (SparkSession, String) => DataFrame] = queries
 }

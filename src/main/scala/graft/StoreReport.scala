@@ -2,14 +2,14 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
-import graft.core.GraftSession
+import graft.operators.StageCommit.corpusFingerprint
 
 /** Operator-facing report over the stored-artifact tree: one line per
-  * (artifact family, fingerprint) found under target/scratch for a corpus
-  * dir — files, bytes, and whether the fingerprint matches the CURRENT
-  * corpus (stale versions linger by design until swept; a serving
+  * (artifact family, fingerprint) found under the scratch root for a
+  * corpus dir — files, bytes, and whether the fingerprint matches the
+  * CURRENT corpus (stale versions linger by design until swept; a serving
   * consumer can never read them, because the accessor resolves through
   * the current fingerprint — see [[graft.sources.FrameStore]]).
   *
@@ -24,82 +24,66 @@ import graft.core.GraftSession
   */
 object StoreReport {
 
-  private case class Row(family: String, version: String, fp: String,
-                         files: Long, bytes: Long, current: Boolean)
+  final case class Version(family: String, fp: String, files: Long,
+                           bytes: Long, current: Boolean)
+
+  /** Artifact versions, plus the round-trip scratch dirs (count, bytes). */
+  final case class Scan(versions: Seq[Version], scratchDirs: Int,
+                        scratchBytes: Long)
+
+  private val Fp = "[0-9a-f]{16}".r
+
+  private def children(p: Path): Seq[Path] = {
+    val s = Files.list(p)
+    try s.iterator().asScala.toSeq finally s.close()
+  }
 
   private def du(p: Path): (Long, Long) = {
-    var files = 0L; var bytes = 0L
-    if (Files.isDirectory(p)) {
-      val s = Files.walk(p)
-      try s.forEach { f =>
-        if (Files.isRegularFile(f)) { files += 1; bytes += Files.size(f) }
-      } finally s.close()
+    val s = Files.walk(p)
+    try s.iterator().asScala.filter(Files.isRegularFile(_))
+      .foldLeft((0L, 0L)) { case ((n, b), f) => (n + 1, b + Files.size(f)) }
+    finally s.close()
+  }
+
+  private def fpDirs(family: Path): Seq[Path] = children(family).filter(c =>
+    Files.isDirectory(c) && Fp.matches(c.getFileName.toString))
+
+  /** The dirs under `root` keyed by corpus `sfDir`. A dir with 16-hex
+    * children is an artifact family, whatever wrote it ([[graft.sources.FrameStore]],
+    * the BM25 store, the resumable funnel's stage root); a version is
+    * current when its fingerprint is the corpus fingerprint of one of the
+    * corpus' `*.parquet` tables. Every other dir is round-trip scratch.
+    */
+  def scan(root: Path, sfDir: String): Scan = {
+    val suffix = "-" + sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val current = children(Paths.get(sfDir)).map(_.getFileName.toString)
+      .filter(_.endsWith(".parquet")).map(corpusFingerprint(sfDir, _)).toSet
+    val dirs =
+      if (!Files.isDirectory(root)) Nil
+      else children(root).filter(d =>
+        Files.isDirectory(d) && d.getFileName.toString.endsWith(suffix))
+    val (families, scratch) = dirs.partition(fpDirs(_).nonEmpty)
+    val versions = for (fam <- families; v <- fpDirs(fam)) yield {
+      val (files, bytes) = du(v)
+      val fp = v.getFileName.toString
+      Version(fam.getFileName.toString.stripSuffix(suffix), fp, files, bytes,
+        current(fp))
     }
-    (files, bytes)
+    Scan(versions.sortBy(v => (v.family, v.fp)), scratch.size,
+      scratch.map(du(_)._2).sum)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark: SparkSession = GraftSession.local()
-    val key = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val root = Paths.get(
-      sys.env.getOrElse("GRAFT_SCRATCH", "/root/repo/target/scratch"))
-    // source table behind each corpus-keyed artifact family (the
-    // accessors' keying); families not matched here are round-trip I/O
-    // scratch, not fingerprint-keyed artifacts
-    def sourceOf(family: String): Option[String] = {
-      val base = family.replaceAll("-v\\d+$", "")
-      base match {
-        case "bm25_store" | "inc_lsh_bands" | "inc_lsh_sets" =>
-          Some("documents.parquet")
-        case "pq_codes" | "ivfpq_index" => Some("embeddings.parquet")
-        case "typo_variants" => Some("customer.parquet")
-        case w if w.startsWith("wide_") =>
-          Some(w.stripPrefix("wide_") + ".parquet")
-        case _ => None
-      }
-    }
-    val fpCache = scala.collection.mutable.Map.empty[String, String]
-    def currentFp(table: String): String =
-      fpCache.getOrElseUpdate(table,
-        try graft.operators.StageCommit.corpusFingerprint(sfDir, table)
-        catch { case _: Throwable => "<absent>" })
-    val isFp = "[0-9a-f]{16}".r
-    val rows = scala.collection.mutable.Buffer.empty[Row]
-    var scratchFamilies = 0; var scratchBytes = 0L
-    if (Files.isDirectory(root)) {
-      val s = Files.list(root)
-      try s.forEach { fam =>
-        val name = fam.getFileName.toString
-        if (name.endsWith(s"-$key") && Files.isDirectory(fam)) {
-          val family = name.stripSuffix(s"-$key")
-          sourceOf(family) match {
-            case Some(table) =>
-              val cur = currentFp(table)
-              val fs = Files.list(fam)
-              try fs.forEach { fpDir =>
-                val fp = fpDir.getFileName.toString
-                if (Files.isDirectory(fpDir) && isFp.matches(fp)) {
-                  val (files, bytes) = du(fpDir)
-                  rows += Row(family, "", fp, files, bytes, fp == cur)
-                }
-              } finally fs.close()
-            case None => // round-trip scratch: count, don't itemize
-              scratchFamilies += 1
-              scratchBytes += du(fam)._2
-          }
-        }
-      } finally s.close()
-    }
+    val s = scan(Paths.get(graft.core.Scratch.root), sfDir)
     println(f"${"family"}%-22s ${"fingerprint"}%-18s ${"files"}%6s ${"MB"}%9s  state")
-    rows.sortBy(r => (r.family, r.fp)).foreach { r =>
+    s.versions.foreach { r =>
       println(f"${r.family}%-22s ${r.fp}%-18s ${r.files}%6d ${r.bytes / 1e6}%9.1f  ${if (r.current) "CURRENT" else "stale"}")
     }
-    val stale = rows.filterNot(_.current)
-    println(f"== ${rows.size} artifact versions, ${stale.size} stale " +
+    val stale = s.versions.filterNot(_.current)
+    println(f"== ${s.versions.size} artifact versions, ${stale.size} stale " +
       f"(${stale.map(_.bytes).sum / 1e6}%.1f MB reclaimable); " +
-      f"$scratchFamilies round-trip scratch dirs " +
-      f"(${scratchBytes / 1e6}%.1f MB, not corpus-keyed) ==")
-    spark.stop()
+      f"${s.scratchDirs} round-trip scratch dirs " +
+      f"(${s.scratchBytes / 1e6}%.1f MB, not corpus-keyed) ==")
   }
 }

@@ -64,4 +64,8 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Session for the mains: `local[SPARK_GRAFT_CPUS]` (default 32). */
+  def fromEnv(): SparkSession =
+    local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 }

@@ -2,6 +2,8 @@ package graft.core
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -30,6 +32,9 @@ object PlanTrace {
         Files.createDirectories(Paths.get(d))
         Files.writeString(Paths.get(s"$d/$label.txt"),
           df.queryExecution.explainString(FormattedMode))
-      } catch { case _: Throwable => () }
+      } catch {
+        case NonFatal(e) => System.err.println(
+          s"[plantrace] $label: ${Measure.message(e)}")
+      }
     }
 }

@@ -2,6 +2,8 @@ package graft.core
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Process-wide memo of expensive derived frames (the near-dup shingle
@@ -57,16 +59,21 @@ object Shared {
     * to make measurable.
     */
   def clear(): Unit = {
-    cache.values().forEach { df =>
-      // drop the columnar cache entry (no-op for non-persisted memos) …
-      try df.unpersist(blocking = false) catch { case _: Throwable => () }
-      // … and the checkpointed RDD, reached through the LogicalRDD node —
-      // df.rdd would derive a NEW (unpersisted) RDD from the plan
-      try df.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      } catch { case _: Throwable => () }
+    cache.forEach { (key, df) =>
+      try {
+        // drop the columnar cache entry (no-op for non-persisted memos) …
+        df.unpersist(blocking = false)
+        // … and the checkpointed RDD, reached through the LogicalRDD node —
+        // df.rdd would derive a NEW (unpersisted) RDD from the plan
+        df.queryExecution.analyzed.foreach {
+          case lr: org.apache.spark.sql.execution.LogicalRDD =>
+            lr.rdd.unpersist(blocking = false)
+          case _ => ()
+        }
+      } catch {
+        case NonFatal(e) => System.err.println(
+          s"[shared] clear: unpersist of ${key._2} failed: ${Measure.message(e)}")
+      }
     }
     cache.clear()
   }

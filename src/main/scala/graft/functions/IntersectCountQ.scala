@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * GenericArrayData result per row is pure allocation. One linear-probe
   * table sized to the build side, probed in place inside whole-stage
   * codegen. Registered as SQL fn `intersect_count_q` through
-  * [[graft.core.GraftSession]]; promoted on a measured MicroBench win
+  * [[graft.core.GraftSession]]; promoted on a measured kernel A/B win
   * (the quantize_q ≥2× bar), parity pinned by IntersectCountQSpec.
   */
 final case class IntersectCountQ(left: Expression, right: Expression)

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * elements preserved — but the HOF form runs one interpreted lambda
   * invocation per element on corpus-scan projections (the catalog's widest
   * hot path), where this is one primitive loop inside whole-stage codegen:
-  * measured 2–3× end-to-end on [[graft.MicroBench]]'s 2²¹×64 kernel
+  * measured 2–3× end-to-end on a 2²¹×64 kernel A/B
   * (min-of-3 through the noop sink, cached-read overhead included —
   * OPTIMIZATION_r13 §14).
   * Third custom Expression after [[Md5Hash48]] and [[DotQ]], same

@@ -205,21 +205,6 @@ object DistributedSearch {
     variants.min
   }
 
-  /** JIT warmup for the backtracking kernel: exhaust a handful of deep
-    * prefix subtrees driver-side. The inner `rec` loop runs interpreted
-    * until C2 compiles it, and a COLD full solve pays ~10× (measured in
-    * BENCH_r04: first pentomino attempt 29.1 s vs 2.7 s steady-state —
-    * the largest single wall-time item in the whole bench run). local-mode
-    * executors share the JVM, so warming here compiles the same methods
-    * the tasks run. A few depth-4 subtrees = millions of `rec` calls at
-    * ~1/1000 the full-tree cost.
-    */
-  def warmPentKernel(): Unit = {
-    var frontier = Seq(PentState(0L, 0, Nil))
-    for (_ <- 0 until 4) frontier = frontier.flatMap(expandPent)
-    frontier.take(8).foreach(s => solvePentFrom(s).foreach(canonicalPent))
-  }
-
   /** Count the distinct 6×10 pentomino tilings: prefix fan-out (first
     * `prefixDepth` piece placements expanded on the driver), one task per
     * prefix subtree, canonicalize under board symmetry, distinct, count.

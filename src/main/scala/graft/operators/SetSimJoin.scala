@@ -85,7 +85,7 @@ object SetSimJoin {
     // keys injective under the gate); on the long-key path the count-only
     // intersect_count_q expression replaces size(array_intersect(…)) —
     // same distinct-shared semantics, no per-pair result-array
-    // materialization (MicroBench r14: 2.2× on the verifier shape). The
+    // materialization (r14 kernel A/B: 2.2× on the verifier shape). The
     // string-key fallback keeps the built-in. The double division
     // replicates verifyJaccard's association order exactly
     val sharedCount =
@@ -236,7 +236,7 @@ object SetSimJoin {
         col("n").as("size_a")), "a_id")
       .join(docArr.select(col("id").as("b_id"), col("arr").as("sb")), "b_id")
       // long-key path: count-only intersection (intersect_count_q, the
-      // measured 2.2× MicroBench win) — the built-in stays on the
+      // measured 2.2× kernel A/B win) — the built-in stays on the
       // string-key fallback
       .withColumn("inter",
         if (hashOk) call_function("intersect_count_q", col("sa"), col("sb"))

@@ -2,9 +2,13 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+
+import graft.core.Measure
 
 /** Streaming throughput probes for the bench harness: drive the two
   * stateful shapes that dominate streaming cost — watermarked windowed
@@ -38,16 +42,15 @@ object StreamingBench {
     * rounds showed a ±2× single-attempt spread from GC/container noise
     * that made round-over-round comparison unreadable — and a `<name>_min`
     * key carries the worse attempt, so the two-run band is ATTESTED in the
-    * JSON (the batch `queries`/`queries_max` convention) rather than the
-    * spread being asserted in prose. A FAILED attempt is retried once
-    * (fresh checkpoint dir, fresh query) before it is allowed to land as
-    * −1: one transient stall must not invalidate a whole round's band.
+    * JSON rather than the spread being asserted in prose. A FAILED
+    * attempt is retried once (fresh checkpoint dir, fresh query) before it
+    * is allowed to land as −1: one transient stall must not invalidate a
+    * whole round's band.
     */
   def run(spark: SparkSession): Seq[(String, String)] = {
-    // attest WHICH provider the un-suffixed probes ran under: round 14
-    // flipped the session default to RocksDB (GraftSession), so the
-    // artifact must say so — a future provider change shows up here
-    // instead of masquerading as a throughput delta
+    // attest WHICH provider the probes ran under (the session default,
+    // RocksDB since round 14 — see GraftSession): a future provider change
+    // shows up here instead of masquerading as a throughput delta
     val provider = spark.conf
       .getOption("spark.sql.streaming.stateStore.providerClass")
       .map(_.split('.').last).getOrElse("HDFSBackedStateStoreProvider")
@@ -64,7 +67,7 @@ object StreamingBench {
       lastAttemptDetail = "{}"
       val details = scala.collection.mutable.ArrayBuffer.empty[String]
       // warm=true runs one UNTIMED attempt first — the streaming analog of
-      // the batch harness's warm_first: the mapGroupsWithState probe's
+      // the batch rows' cold attempt: the mapGroupsWithState probe's
       // per-row typed lambda ramps through the interpreter across most of
       // an attempt's 6 batches (r8 band 230–787 K rows/s, 3.4×, with the
       // per-batch median already in place — so the spread is ATTEMPT-level
@@ -150,54 +153,7 @@ object StreamingBench {
               " theta iota kappa lambda", col("value") % 200000L).as("text"),
             col("timestamp").as("ts"))
         StreamingOps.ingestPackStream(src, "ts", "10 seconds").toDF()
-      }) ++
-    // RocksDB state-store A/B (round-12 verdict task 5): the r12 cause
-    // fields adjudicated the wide driver bands on the two state-heaviest
-    // probes as state-store load (state_ms 146-240 s on slow attempts vs
-    // 46-74 s on good ones) — the default HDFS-backed provider keeps every
-    // version of every key on the JVM heap, where suite-long retained sets
-    // and GC pressure hit exactly the commit path state_ms measures.
-    // RocksDB moves state off-heap with its own write buffer; these rows
-    // re-run the SAME two probes under the RocksDB provider so the A/B is
-    // attested IN the artifact (same rate source, same batches, same
-    // per-attempt cause fields). Session conf is set per-probe and
-    // restored after — streaming queries bind the provider at start, so
-    // the surrounding probes are unaffected.
-    withRocksDb(spark)(
-      band2("stream_stream_join_rocksdb_rows_per_sec")(
-        measure(spark, batches = 6) { s =>
-          val l = rateSource(s, rowsPerBatch = 250000L)
-            .select(col("value").as("k"), col("timestamp").as("lts"))
-          val r = rateSource(s, rowsPerBatch = 250000L)
-            .select(col("value").as("k"), col("timestamp").as("rts"),
-              (col("value") % 1000).as("payload"))
-          StreamingOps.streamJoin(l, r, "k", "lts", "rts",
-            watermark = "2 seconds", bandSeconds = 1)
-        }) ++
-      band2("keyed_sketch_rocksdb_rows_per_sec", warm = true, attempts = 3)(
-        measure(spark, batches = 6, outputMode = "update") { s =>
-          import s.implicits._
-          val src = rateSource(s, rowsPerBatch = 1000000L)
-            .select((col("value") % 64).cast("string").as("source"),
-              (col("value") % 100000).cast("string").as("word"))
-            .as[StreamingOps.KmvEv]
-          StreamingOps.distinctStream(src, k = 64).toDF()
-        }))
-  }
-
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-
-  private def withRocksDb(spark: SparkSession)(
-      body: => Seq[(String, String)]): Seq[(String, String)] = {
-    val prev = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey, RocksDbProvider)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
-    }
+      })
   }
 
   private def rateSource(spark: SparkSession, rowsPerBatch: Long): DataFrame =
@@ -229,18 +185,12 @@ object StreamingBench {
     */
   private var lastAttemptDetail: String = "{}"
 
-  private def jvmGcMs: Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime).filter(_ > 0).sum
-  }
-
   private def measure(spark: SparkSession, batches: Int,
                       outputMode: String = "append")(
       build: SparkSession => DataFrame): (Double, String) = {
     val ckpt = Files.createTempDirectory("graft-sbench").toString
     lastAttemptDetail = "{}"
-    val gc0 = jvmGcMs
+    val gc0 = Measure.jvmGcMs
     val wall0 = System.nanoTime()
     try {
       val q = build(spark).writeStream.format("noop")
@@ -266,7 +216,7 @@ object StreamingBench {
       // attempt-cause fields: GC share of the attempt wall, per-batch
       // throughput spread, and the state-store's share of trigger time
       // (update+commit, median over the steady batches)
-      val gcMs = jvmGcMs - gc0
+      val gcMs = Measure.jvmGcMs - gc0
       val wallS = (System.nanoTime() - wall0) / 1e9
       val stateMs = ps.toSeq.map(p =>
         p.stateOperators.map(so => so.allUpdatesTimeMs + so.commitTimeMs).sum
@@ -281,7 +231,7 @@ object StreamingBench {
         (-1.0, s"deadline_${DeadlineSec}s_${productive}batches")
       else (-1.0, "empty_progress")
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"[bench] streaming probe failed: ${e.getMessage}")
         (-1.0, s"exception:${Option(e.getMessage).getOrElse(e.getClass.getSimpleName).take(80)}")
     }
