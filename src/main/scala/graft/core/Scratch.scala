@@ -7,7 +7,7 @@ import java.nio.file.{Files, Paths}
   * different scale factors never read each other's stale output.
   */
 object Scratch {
-  val root: String = sys.env.getOrElse("GRAFT_SCRATCH", "/root/repo/target/scratch")
+  val root: String = sys.env.getOrElse("GRAFT_SCRATCH", "target/scratch")
 
   def dir(name: String, sfDir: String): String = {
     val key = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
